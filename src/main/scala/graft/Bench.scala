@@ -29,16 +29,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.install(spark)
 
-    GeoTables.ensure(spark, sfDir)         // one-time synth, untimed
-    GeoTables.ensureTri(spark, sfDir)      // triangle fixture, untimed
-    GeoTables.ensureNearDup(spark, sfDir)  // planted pHash variants, untimed
-    GeoTables.ensureTextFeat(spark, sfDir) // docs_aug + text_features, untimed
-    GeoTables.ensureMedia(spark, sfDir)    // GMV1 media fixture, untimed
-    GeoTables.ensureImgMoments(spark, sfDir) // moments fixture, untimed
-    GeoTables.ensureImgGamma(spark, sfDir)   // gamma fixture, untimed
-    GeoTables.ensureMediaZcr(spark, sfDir)   // zcr fixture, untimed
-    GeoTables.ensureImgHaar(spark, sfDir)    // Haar-energy fixture, untimed
-    GeoTables.ensureImgMc(spark, sfDir)      // median-cut fixture, untimed
+    GeoTables.ensure(spark, sfDir)           // one-time synth, untimed
+    GeoTables.ensureAllDerived(spark, sfDir) // every derived fixture, untimed
 
     // warm-up: flagship join + the headline q07 itself (JIT, codegen,
     // parquet footers — the driver-visible q07 number should reflect warm

@@ -1616,7 +1616,7 @@ object SparkEntry {
     // one agg shuffle.
     "q157_ssim" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgSsim(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       val fix = s.read.parquet(GeoTables.imgSsimPath(dir))
         .select(col("image_id"), col("ssim_self").as("f_self"), col("ssim_blur").as("f_blur"))
       GeoTables.images(s, dir)
@@ -2323,7 +2323,7 @@ object SparkEntry {
     // decode+kernel, one shuffle for the histogram — scales like q11.
     "q126_blur_filter" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgQuality(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       val feat = s.read.parquet(GeoTables.imgQualityPath(dir))
       GeoTables.images(s, dir)
         .withColumn("rgb", call_function("img_rgb", col("bytes")))
@@ -2465,7 +2465,7 @@ object SparkEntry {
     // shape already proven by its standalone query.
     "q132_img_curation" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgQuality(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       val feat = s.read.parquet(GeoTables.imgQualityPath(dir)).select("image_id", "sharp")
       val aoi = GeoTables.zones(s, dir).where(col("zone_id") === "zone00000")
       val inAoi = SpatialJoins.pipJoin(GeoTables.images(s, dir), aoi,
@@ -2917,7 +2917,7 @@ object SparkEntry {
     // the row, so nothing wide shuffles.
     "q151_colorhist" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgColor(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       val fix = s.read.parquet(GeoTables.imgColorPath(dir))
         .select(col("image_id"), col("dom_bin").as("f_dom"),
           col("dom_cnt").as("f_cnt"), col("n_px").as("f_npx"))
@@ -4407,7 +4407,7 @@ object SparkEntry {
     // decode, one agg shuffle — the per-row feature-extraction shape.
     "q166_edge_profile" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgEdge(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       val fix = s.read.parquet(GeoTables.imgEdgePath(dir))
         .select(col("image_id"), col("edge_cnt").as("f_cnt"), col("grad_sum").as("f_sum"),
           col("octs").as("f_octs"), col("dom_oct").as("f_dom"))
@@ -4437,7 +4437,7 @@ object SparkEntry {
     // DuckDB index the same slots.
     "q167_exposure" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgExpo(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       val fix = s.read.parquet(GeoTables.imgExpoPath(dir))
         .select(col("image_id"), col("hist").as("f_hist"), col("n_px").as("f_npx"))
       GeoTables.images(s, dir)
@@ -4564,7 +4564,7 @@ object SparkEntry {
     // perceptual-stability profile of the resize. Row-parallel, one agg.
     "q173_thumbnail" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgThumb(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       val fix = s.read.parquet(GeoTables.imgThumbPath(dir))
         .select(col("image_id"), col("t_phash").as("f_tp"),
           col("t_md5").as("f_md5"), col("f_ham"))
@@ -4940,7 +4940,7 @@ object SparkEntry {
     // pixels (fixture images are 2048 px).
     "q192_tonal_diversity" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgExpo(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("hist", call_function("img_luma_hist16",
           call_function("img_rgb", col("bytes"))))
@@ -5229,7 +5229,7 @@ object SparkEntry {
     // keyed by tile, tie-broken by image_id.
     "q202_tile_median_luma" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgExpo(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       val m = GeoTables.images(s, dir)
         .withColumn("hist", call_function("img_luma_hist16",
           call_function("img_rgb", col("bytes"))))
@@ -5398,7 +5398,7 @@ object SparkEntry {
     // one scan, stays in the decode pipeline.
     "q211_equalize" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgEq(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("eq", call_function("img_equalize_rgb",
           call_function("img_rgb", col("bytes"))))
@@ -5419,7 +5419,7 @@ object SparkEntry {
     // identical integers from the recompute-pinned img_wb fixture.
     "q212_whitebalance" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgWb(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("cs", call_function("img_channel_sums",
           call_function("img_rgb", col("bytes"))))
@@ -5660,7 +5660,7 @@ object SparkEntry {
     // parallel, zero shuffles beyond the thin argmax window.
     "q221_otsu" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgExpo(s, dir) // the oracle replays the pinned hist
+      GeoTables.ensureImgFixtures(s, dir) // the oracle replays the pinned hist
       GeoTables.images(s, dir)
         .withColumn("hist", call_function("img_luma_hist16",
           call_function("img_rgb", col("bytes"))))
@@ -6007,7 +6007,7 @@ object SparkEntry {
     // (the q211 contract: a single kernel defect changes the md5).
     "q233_median3" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgMed(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("rgb", call_function("img_rgb", col("bytes")))
         .withColumn("med", call_function("img_median3_rgb", col("rgb"), col("w"), col("h")))
@@ -6186,7 +6186,7 @@ object SparkEntry {
     // curation pass drops. Scan-parallel decode; one agg shuffle.
     "q240_entropy" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgExpo(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("hist", call_function("img_luma_hist16",
           call_function("img_rgb", col("bytes"))))
@@ -6211,7 +6211,7 @@ object SparkEntry {
     // contract: a single diffusion defect changes the md5 or the SAD).
     "q241_dither" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgDither(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("rgb", call_function("img_rgb", col("bytes")))
         .withColumn("dit", call_function("img_dither_rgb", col("rgb"), col("w"), col("h")))
@@ -6485,7 +6485,7 @@ object SparkEntry {
     // MomentsSpec pins the rot90 transport (μ20 ↔ μ02, μ11 → −μ11).
     "q251_moments" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgMoments(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("mom", call_function("img_moments",
           call_function("img_rgb", col("bytes")), col("w"), col("h")))
@@ -6840,7 +6840,7 @@ object SparkEntry {
     // channel-sum + L1-distortion payload. Scan-parallel, zero shuffles.
     "q266_gamma" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgGamma(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("rgb", call_function("img_rgb", col("bytes")))
         .withColumn("gam", call_function("img_gamma_rgb", col("rgb"), lit(2200)))
@@ -7066,7 +7066,7 @@ object SparkEntry {
     // integer. Scan-only decode work, no shuffle beyond the group.
     "q275_glcm" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgGlcm(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("g", call_function("img_glcm8",
           call_function("img_rgb", col("bytes")), col("w"), col("h")))
@@ -7148,7 +7148,7 @@ object SparkEntry {
     // One scan, decode once, row-parallel — scales like every per-image map.
     "q276_lbp" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgTex(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("lh", call_function("img_lbp_hist",
           call_function("img_rgb", col("bytes")), col("w"), col("h")))
@@ -7172,7 +7172,7 @@ object SparkEntry {
     // recompute fixture (q230 contract). Row-parallel single scan.
     "q277_harris" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgTex(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("ha", call_function("img_harris",
           call_function("img_rgb", col("bytes")), col("w"), col("h")))
@@ -7195,7 +7195,7 @@ object SparkEntry {
     // cross-checked, not just copied.
     "q278_hue" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgTex(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("hh", call_function("img_hue_hist",
           call_function("img_rgb", col("bytes"))))
@@ -7596,7 +7596,7 @@ object SparkEntry {
     // reference).
     "q291_palette" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgTex(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("pl", call_function("img_pal332",
           call_function("img_rgb", col("bytes"))))
@@ -7909,7 +7909,7 @@ object SparkEntry {
     // closed-form reference plus flip/rot90 band transport.
     "q304_haar" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgHaar(s, dir)
+      GeoTables.ensureImgFixtures(s, dir)
       GeoTables.images(s, dir)
         .withColumn("e", call_function("img_haar",
           call_function("img_rgb", col("bytes")), col("w"), col("h")))
@@ -8131,8 +8131,7 @@ object SparkEntry {
     // Row-parallel one-scan kernel.
     "q312_mediancut" -> ((s, dir) => {
       GraftFunctions.install(s)
-      GeoTables.ensureImgMc(s, dir)
-      GeoTables.ensureImgTex(s, dir) // the oracle's qerr_332 source
+      GeoTables.ensureImgFixtures(s, dir) // img_mc + the oracle's qerr_332 source (img_tex)
       GeoTables.images(s, dir)
         .withColumn("rgb", call_function("img_rgb", col("bytes")))
         .withColumn("mc", call_function("img_mediancut", col("rgb")))

@@ -1,7 +1,8 @@
 package graft.data
 
 import graft.img.Images
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -24,6 +25,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  *
  * Written once per scale factor to /tmp/graft_geo/<sfName>/ with an
  * atomic tmp→rename commit so Bench/Verify query functions stay pure.
+ * Every derived fixture (triangles, shift grid, near-dup/xmodal plants,
+ * text features, media, the 16 image-feature tables) is built through
+ * [[derived]], additive to that base dir under its own marker.
  */
 object GeoTables {
 
@@ -147,17 +151,11 @@ object GeoTables {
     spark.read.parquet(triZonesPath(sfDir))
   }
 
-  /** Additive to an existing committed base dir (round-1 fixtures lack
-    * tri_zones); own marker so existing images/zones never regenerate. */
-  def ensureTri(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_TRI_DONE"))) return
+  def ensureTri(spark: SparkSession, sfDir: String): Unit = derived(spark, sfDir, "TRI") {
     import spark.implicits._
     val n = nTris(sfDir)
     spark.range(0, n, 1, 8).map(t => triRow(t, n))
       .write.mode("overwrite").parquet(triZonesPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_TRI_DONE"))
   }
 
   // ---------------- NTv2 shift-grid fixture (q70) ----------------
@@ -183,12 +181,9 @@ object GeoTables {
     (dlon, dlat)
   }
 
-  /** Additive fixture: writes the .gsb the engine loads AND the same nodes
-    * as parquet for the DuckDB oracle's bilinear reconstruction. */
-  def ensureGrid(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_GRID_DONE"))) return
+  /** Writes the .gsb the engine loads AND the same nodes as parquet for
+    * the DuckDB oracle's bilinear reconstruction. */
+  def ensureGrid(spark: SparkSession, sfDir: String): Unit = derived(spark, sfDir, "GRID") {
     import spark.implicits._
     val n = GRID_COLS * GRID_ROWS
     val lonS = new Array[Float](n); val latS = new Array[Float](n)
@@ -210,7 +205,6 @@ object GeoTables {
         GRID_COLS, GRID_ROWS, lonS, latS),
       gridGsbPath(sfDir))
     rows.toSeq.toDF().coalesce(1).write.mode("overwrite").parquet(gridNodesPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_GRID_DONE"))
   }
 
   def nearDupImagesPath(sfDir: String): String = s"${baseDir(sfDir)}/neardup_images.parquet"
@@ -236,17 +230,13 @@ object GeoTables {
   }
 
   /**
-   * Near-duplicate pHash fixture (additive, own marker — mirrors the tri
-   * pattern): the synthetic phashes are near-uniform (min pairwise hamming
-   * ≈ 8), so true near-dups are PLANTED — every 10th of the first
-   * min(5000, n) images gets a variant row whose phash differs in 1–4
-   * deterministic bit positions. Gives the phash near-dup join (q12) a
-   * realistic cluster structure with a brute-forceable oracle.
+   * Near-duplicate pHash fixture: the synthetic phashes are near-uniform
+   * (min pairwise hamming ≈ 8), so true near-dups are PLANTED — every
+   * 10th of the first min(5000, n) images gets a variant row whose phash
+   * differs in 1–4 deterministic bit positions. Gives the phash near-dup
+   * join (q12) a realistic cluster structure with a brute-forceable oracle.
    */
-  def ensureNearDup(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_NEARDUP_DONE"))) return
+  def ensureNearDup(spark: SparkSession, sfDir: String): Unit = derived(spark, sfDir, "NEARDUP") {
     import spark.implicits._
     val n = math.min(5000L, nImages(sfDir)).toInt
     val baseRows = spark.read.parquet(imagesPath(sfDir))
@@ -257,7 +247,6 @@ object GeoTables {
     }
     spark.createDataset((baseRows ++ variants).toSeq).toDF("id", "phash")
       .repartition(4).write.mode("overwrite").parquet(nearDupImagesPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_NEARDUP_DONE"))
   }
 
   def xmodalPath(sfDir: String): String = s"${baseDir(sfDir)}/xmodal.parquet"
@@ -269,19 +258,16 @@ object GeoTables {
     spark.read.parquet(xmodalPath(sfDir))
   }
 
-  /** Cross-modal near-dup fixture (additive, own marker): image+caption
-    * rows where every 10th row gets a planted variant that is ALWAYS a
-    * pHash near-dup (1–4 deterministic bit flips, the ensureNearDup
-    * recipe) but only SOMETIMES a caption near-dup — even-indexed plants
+  /** Cross-modal near-dup fixture: image+caption rows where every 10th
+    * row gets a planted variant that is ALWAYS a pHash near-dup (1–4
+    * deterministic bit flips, the ensureNearDup recipe) but only
+    * SOMETIMES a caption near-dup — even-indexed plants
     * keep the caption verbatim, odd-indexed ones pass it through
     * variantText (1–4 OOV token substitutions), so the cross-modal
     * conjunction in q156 has pairs that pass the image gate and fail the
     * text gate and vice-versa nothing is ever a text-only near-dup (base
     * captions are pairwise distinct). */
-  def ensureXmodal(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_XMODAL_DONE"))) return
+  def ensureXmodal(spark: SparkSession, sfDir: String): Unit = derived(spark, sfDir, "XMODAL") {
     import spark.implicits._
     val n = math.min(3000L, nImages(sfDir)).toInt
     val baseRows = spark.read.parquet(imagesPath(sfDir))
@@ -304,7 +290,6 @@ object GeoTables {
     }
     spark.createDataset((baseRows ++ variants).toSeq).toDF()
       .repartition(4).write.mode("overwrite").parquet(xmodalPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_XMODAL_DONE"))
   }
 
   // ---------------- text-dedup fixtures (q16–q20 exact oracles) ----------------
@@ -375,13 +360,9 @@ object GeoTables {
     spark.read.parquet(textFeaturesPath(sfDir))
   }
 
-  /** Additive fixture (own marker, mirrors the tri pattern): docs_aug =
-    * documents ∪ planted variants; text_features = per-doc derived columns
-    * computed by the SAME Text kernels the expressions wrap. */
-  def ensureTextFeat(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_TEXTFEAT_DONE"))) return
+  /** docs_aug = documents ∪ planted variants; text_features = per-doc
+    * derived columns computed by the SAME Text kernels the expressions wrap. */
+  def ensureTextFeat(spark: SparkSession, sfDir: String): Unit = derived(spark, sfDir, "TEXTFEAT") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "source", "text").as[DocRow]
@@ -392,459 +373,193 @@ object GeoTables {
     spark.read.parquet(docsAugPath(sfDir)).as[DocRow]
       .map(d => featRow(d.doc_id, d.source, d.text))
       .write.mode("overwrite").parquet(textFeaturesPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_TEXTFEAT_DONE"))
   }
 
-  // ---- image-quality fixture (blur/sharpness filter oracle) ----
+  // ---------------- image-feature fixtures (one decode pass) ----------------
+  //
+  // Sixteen per-image tables, each computed through the SAME kernel the
+  // matching SQL expression wraps: a query that recomputes a feature
+  // in-engine must match its fixture row for row, and the oracle then
+  // checks the relational logic over it (the q12 phash precedent; closed-
+  // form kernel cases live in the img specs). [[ensureImgFixtures]] builds
+  // all sixteen from one scan of images.parquet and one decode per image.
 
-  def imgQualityPath(sfDir: String): String = s"${baseDir(sfDir)}/img_quality.parquet"
   def imgColorPath(sfDir: String): String = s"${baseDir(sfDir)}/img_color.parquet"
-
-  final case class ImgColorRow(image_id: String, dom_bin: Long, dom_cnt: Long, n_px: Long)
-
-  /** Dominant-color fixture: 64-bin 4×4×4 RGB histogram per decoded image,
-    * dominant bin by FIRST max (the tie rule Spark's array_position shares),
-    * plus the conservation total. The engine recomputes all three through
-    * the SQL surface and q151 pins row-for-row equality. */
-  def ensureImgColor(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGCOLOR_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val rgb = Images.decode(bytes)._3
-        val hist = Images.colorHist64(rgb)
-        var bi = 0; var bc = -1L; var tot = 0L
-        var k = 0
-        while (k < 64) {
-          if (hist(k) > bc) { bc = hist(k); bi = k }
-          tot += hist(k); k += 1
-        }
-        ImgColorRow(id, bi.toLong, bc, tot)
-      }
-      .write.mode("overwrite").parquet(imgColorPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGCOLOR_DONE"))
-  }
-
   def imgEdgePath(sfDir: String): String = s"${baseDir(sfDir)}/img_edge.parquet"
+  def imgExpoPath(sfDir: String): String = s"${baseDir(sfDir)}/img_expo.parquet"
+  def imgGammaPath(sfDir: String): String = s"${baseDir(sfDir)}/img_gamma.parquet"
+  def imgMomPath(sfDir: String): String = s"${baseDir(sfDir)}/img_moments.parquet"
+  def imgThumbPath(sfDir: String): String = s"${baseDir(sfDir)}/img_thumb.parquet"
+  def imgEqPath(sfDir: String): String = s"${baseDir(sfDir)}/img_eq.parquet"
+  def imgMedPath(sfDir: String): String = s"${baseDir(sfDir)}/img_med.parquet"
+  def imgDitherPath(sfDir: String): String = s"${baseDir(sfDir)}/img_dither.parquet"
+  def imgGlcmPath(sfDir: String): String = s"${baseDir(sfDir)}/img_glcm.parquet"
+  def imgTexPath(sfDir: String): String = s"${baseDir(sfDir)}/img_tex.parquet"
+  def imgHaarPath(sfDir: String): String = s"${baseDir(sfDir)}/img_haar.parquet"
+  def imgMcPath(sfDir: String): String = s"${baseDir(sfDir)}/img_mc.parquet"
+  def imgWbPath(sfDir: String): String = s"${baseDir(sfDir)}/img_wb.parquet"
+  def imgSsimPath(sfDir: String): String = s"${baseDir(sfDir)}/img_ssim.parquet"
+  def imgQualityPath(sfDir: String): String = s"${baseDir(sfDir)}/img_quality.parquet"
 
+  /** 64-bin 4×4×4 RGB histogram: dominant bin by FIRST max (the tie rule
+    * Spark's array_position shares), its count, the pixel total (q151). */
+  final case class ImgColorRow(image_id: String, dom_bin: Long, dom_cnt: Long, n_px: Long)
+  /** Sobel edge count, gradient sum, 8-octant orientation histogram and the
+    * dominant octant by FIRST max, 1-based (array_position / list_position). */
   final case class ImgEdgeRow(image_id: String, edge_cnt: Long, grad_sum: Long,
                               octs: Array[Long], dom_oct: Long)
-
-  /** Sobel edge-profile fixture through the SAME kernel the SQL
-    * expression calls (q151 recompute-pin pattern): per-image edge count,
-    * gradient sum, 8-octant orientation histogram, and the dominant
-    * octant by FIRST max (1-based — the tie rule Spark's array_position
-    * and DuckDB's list_position share). */
-  def ensureImgEdge(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGEDGE_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes", "w", "h")
-      .as[(String, Array[Byte], Int, Int)]
-      .map { case (id, bytes, w, h) =>
-        val es = Images.sobelStats(w, h, Images.decode(bytes)._3)
-        val octs = es.slice(2, 10)
-        var bi = 0; var bc = -1L; var k = 0
-        while (k < 8) { if (octs(k) > bc) { bc = octs(k); bi = k }; k += 1 }
-        ImgEdgeRow(id, es(0), es(1), octs, bi.toLong + 1)
-      }
-      .write.mode("overwrite").parquet(imgEdgePath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGEDGE_DONE"))
-  }
-
-  def imgExpoPath(sfDir: String): String = s"${baseDir(sfDir)}/img_expo.parquet"
-
+  /** 16-bin luma (exposure) histogram. */
   final case class ImgExpoRow(image_id: String, hist: Array[Long], n_px: Long)
-
-  /** 16-bin luma-histogram (exposure) fixture through the same kernel. */
-  def ensureImgExpo(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGEXPO_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val hist = Images.lumaHist16(Images.decode(bytes)._3)
-        ImgExpoRow(id, hist, hist.sum)
-      }
-      .write.mode("overwrite").parquet(imgExpoPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGEXPO_DONE"))
-  }
-
-  def imgGammaPath(sfDir: String): String = s"${baseDir(sfDir)}/img_gamma.parquet"
-
+  /** Gamma-2.2 tone curve: the mapped buffer's md5 pins every byte; channel
+    * sums and L1 distortion carry the analytics payload (q167/q221). */
   final case class ImgGammaRow(image_id: String, gam_md5: String,
                                cs: Array[Long], sad: Long)
-
-  /** Gamma-2.2 tone-curve fixture through the same kernel (q167/q221
-    * recompute contract): md5 of the mapped buffer pins every byte, the
-    * channel sums + L1 distortion carry the analytics payload. */
-  def ensureImgGamma(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGGAMMA_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val rgb = Images.decode(bytes)._3
-        val gam = Images.gammaRgb(rgb, 2200)
-        val md = java.security.MessageDigest.getInstance("MD5").digest(gam)
-          .map(b => f"${b & 0xFF}%02x").mkString
-        ImgGammaRow(id, md, Images.channelSums(gam), Images.sad(rgb, gam))
-      }
-      .write.mode("overwrite").parquet(imgGammaPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGGAMMA_DONE"))
-  }
-
-  def imgMomPath(sfDir: String): String = s"${baseDir(sfDir)}/img_moments.parquet"
-
+  /** Raw luma moment sums. */
   final case class ImgMomRow(image_id: String, mom: Array[Long])
-
-  /** Raw luma moment sums fixture through the same kernel (the
-    * q167/q221 recompute contract: fixture == in-query recompute). */
-  def ensureImgMoments(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGMOM_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val (w, h, rgb) = Images.decode(bytes)
-        ImgMomRow(id, Images.moments(rgb, w, h))
-      }
-      .write.mode("overwrite").parquet(imgMomPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGMOM_DONE"))
-  }
-
-  def imgThumbPath(sfDir: String): String = s"${baseDir(sfDir)}/img_thumb.parquet"
-
+  /** 16×16 thumbnail: its phash, its md5 (lowercase hex, Spark's md5()
+    * convention) and the hamming distance to the stored full-size phash. */
   final case class ImgThumbRow(image_id: String, t_phash: Long, t_md5: String, f_ham: Long)
-
-  /** 16×16 thumbnail fixture through the SAME decode→resize kernels the
-    * SQL surface composes (img_resize_rgb → img_phash_rgb / md5):
-    * thumbnail phash, thumbnail md5 (lowercase hex, Spark's md5()
-    * convention), and the hamming distance to the stored full-size
-    * phash — the mipmap-consistency signal. */
-  def ensureImgThumb(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGTHUMB_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes", "phash")
-      .as[(String, Array[Byte], Long)]
-      .map { case (id, bytes, ph) =>
-        val (w, h, rgb) = Images.decode(bytes)
-        val thumb = Images.resizeRgb(w, h, rgb, 16, 16)
-        val tp = Images.phashOfRgb(16, 16, thumb)
-        val md = java.security.MessageDigest.getInstance("MD5").digest(thumb)
-        val hex = md.map(b => f"${b & 0xFF}%02x").mkString
-        ImgThumbRow(id, tp, hex, java.lang.Long.bitCount(ph ^ tp).toLong)
-      }
-      .write.mode("overwrite").parquet(imgThumbPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGTHUMB_DONE"))
-  }
-
-  def imgEqPath(sfDir: String): String = s"${baseDir(sfDir)}/img_eq.parquet"
-
+  /** Histogram-equalized buffer: md5 and 16-bin luma histogram (q211). */
   final case class ImgEqRow(image_id: String, eq_md5: String, eq_hist: Array[Long])
-
-  /** Histogram-equalization fixture through the SAME kernels the SQL
-    * surface composes (img_equalize_rgb → md5 / img_luma_hist16): the
-    * equalized buffer's md5 (lowercase hex, Spark's md5() convention)
-    * and its 16-bin luma histogram — the q211 consistency contract. */
-  def ensureImgEq(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGEQ_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val eq = Images.equalizeRgb(Images.decode(bytes)._3)
-        val md = java.security.MessageDigest.getInstance("MD5").digest(eq)
-        ImgEqRow(id, md.map(b => f"${b & 0xFF}%02x").mkString, Images.lumaHist16(eq))
-      }
-      .write.mode("overwrite").parquet(imgEqPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGEQ_DONE"))
-  }
-
-  def imgMedPath(sfDir: String): String = s"${baseDir(sfDir)}/img_med.parquet"
-
+  /** 3×3 median filter: buffer md5, sharpness before and after (q230). */
   final case class ImgMedRow(image_id: String, med_md5: String,
                              sharp_before: Long, sharp_after: Long)
-
-  /** Median-filter fixture through the SAME kernels the SQL surface
-    * composes (img_median3_rgb → md5, img_sharpness before/after): the
-    * q230 consistency contract — a single kernel defect changes the
-    * buffer md5 or the edge-energy drop. */
-  def ensureImgMed(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGMED_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val (w, h, rgb) = Images.decode(bytes)
-        val med = Images.median3Rgb(w, h, rgb)
-        val md = java.security.MessageDigest.getInstance("MD5").digest(med)
-        ImgMedRow(id, md.map(b => f"${b & 0xFF}%02x").mkString,
-          Images.sharpness(w, h, rgb), Images.sharpness(w, h, med))
-      }
-      .write.mode("overwrite").parquet(imgMedPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGMED_DONE"))
-  }
-
-  def imgDitherPath(sfDir: String): String = s"${baseDir(sfDir)}/img_dither.parquet"
-
+  /** Floyd–Steinberg dither: buffer md5, lit-channel sum, L1 distortion (q241). */
   final case class ImgDitherRow(image_id: String, dit_md5: String,
                                 on_sum: Long, sad: Long)
-
-  /** Floyd–Steinberg fixture through the SAME kernels the SQL surface
-    * composes (img_dither_rgb → md5, channel sums, img_sad) — the q241
-    * consistency contract: a single diffusion defect changes the buffer
-    * md5 or the L1 distortion. */
-  def ensureImgDither(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGDIT_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val (w, h, rgb) = Images.decode(bytes)
-        val dit = Images.ditherFsRgb(w, h, rgb)
-        val md = java.security.MessageDigest.getInstance("MD5").digest(dit)
-        ImgDitherRow(id, md.map(b => f"${b & 0xFF}%02x").mkString,
-          Images.channelSums(dit).take(3).sum, Images.sad(rgb, dit))
-      }
-      .write.mode("overwrite").parquet(imgDitherPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGDIT_DONE"))
-  }
-
-  def imgGlcmPath(sfDir: String): String = s"${baseDir(sfDir)}/img_glcm.parquet"
-
+  /** 8-level GLCM: contrast, energy, homogeneity ×1000 and pair total (q230). */
   final case class ImgGlcmRow(image_id: String, contrast: Long, energy: Long,
                               homog_milli: Long, n_pairs: Long)
-
-  /** GLCM texture fixture through the SAME kernel the SQL surface
-    * composes (img_glcm8 → contrast/energy/homogeneity/total): the q230
-    * consistency contract — a single co-occurrence defect (w/h swap,
-    * off-by-one pair walk, asymmetry) changes at least one integer. */
-  def ensureImgGlcm(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGGLCM_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val (w, h, rgb) = Images.decode(bytes)
-        val g = Images.glcm8(w, h, rgb)
-        var contrast = 0L; var energy = 0L; var homog = 0L; var tot = 0L
-        var k = 0
-        while (k < 64) {
-          val i = k / 8; val j = k % 8; val c = g(k)
-          contrast += c * (i - j) * (i - j)
-          energy += c * c
-          homog += (c * 1000L) / (1 + math.abs(i - j))
-          tot += c
-          k += 1
-        }
-        ImgGlcmRow(id, contrast, energy, homog, tot)
-      }
-      .write.mode("overwrite").parquet(imgGlcmPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGGLCM_DONE"))
-  }
-
-  def imgTexPath(sfDir: String): String = s"${baseDir(sfDir)}/img_tex.parquet"
-
+  /** LBP / Harris / hue / 3-3-2 palette (q276–q278). The LBP uniform
+    * predicate mirrors the query's SQL text exactly: bit_count(p XOR
+    * rotl8(p)) ≤ 2, rotl8(p) = (p·2) mod 256 + p div 128; the top pattern
+    * ties to the smallest index. */
   final case class ImgTexRow(image_id: String,
                              lbp_n: Long, lbp_uniform: Long, lbp_top: Long, lbp_topc: Long,
                              ha_eval: Long, ha_pos: Long, ha_rmax: Long, ha_x: Long, ha_y: Long,
                              h0: Long, h1: Long, h2: Long, h3: Long, h4: Long, h5: Long,
                              gray: Long,
                              pal_n: Long, pal_top: Long, pal_topc: Long, pal_qerr: Long)
-
-  /** Texture/corner/hue fixture through the SAME kernels the SQL surface
-    * composes (img_lbp_hist / img_harris / img_hue_hist) — one decode
-    * pass, the q230 recompute-pin contract for q276/q277/q278. The LBP
-    * uniform predicate here mirrors the query's SQL text exactly:
-    * bit_count(p XOR rotl8(p)) ≤ 2, rotl8(p) = (p·2) mod 256 + p div 128;
-    * the top pattern ties to the smallest index. */
-  def ensureImgTex(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    // v2 marker: the s16 palette columns force stale v1 fixtures to regen
-    if (Files.exists(Paths.get(s"$base/_IMGTEX2_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val (w, h, rgb) = Images.decode(bytes)
-        val lbp = Images.lbpHist(w, h, rgb)
-        var n = 0L; var uni = 0L; var top = 0L; var topc = -1L
-        var p = 0
-        while (p < 256) {
-          val c = lbp(p)
-          n += c
-          val rot = (p * 2) % 256 + p / 128
-          if (java.lang.Integer.bitCount(p ^ rot) <= 2) uni += c
-          if (c > topc) { topc = c; top = p }
-          p += 1
-        }
-        val ha = Images.harris(w, h, rgb)
-        val hu = Images.hueHist(rgb)
-        val pl = Images.pal332(rgb)
-        ImgTexRow(id, n, uni, top, topc,
-          ha(0), ha(1), ha(2), ha(3), ha(4),
-          hu(0), hu(1), hu(2), hu(3), hu(4), hu(5), hu(6),
-          pl(0), pl(1), pl(2), pl(3))
-      }
-      .write.mode("overwrite").parquet(imgTexPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGTEX2_DONE"))
-  }
-
-  def imgHaarPath(sfDir: String): String = s"${baseDir(sfDir)}/img_haar.parquet"
-
+  /** Haar subband energies (q212). */
   final case class ImgHaarRow(image_id: String, w: Long, h: Long,
                               ll2: Long, lh2: Long, hl2: Long, hh2: Long,
                               lh1: Long, hl1: Long, hh1: Long)
-
-  /** Haar subband-energy fixture through the SAME kernel img_haar wraps
-    * (q212 recompute-pin contract). */
-  def ensureImgHaar(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGHAAR_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val (w, h, rgb) = Images.decode(bytes)
-        val e = Images.haarEnergy(w, h, rgb)
-        ImgHaarRow(id, w.toLong, h.toLong,
-          e(0), e(1), e(2), e(3), e(4), e(5), e(6))
-      }
-      .write.mode("overwrite").parquet(imgHaarPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGHAAR_DONE"))
-  }
-
-  def imgMcPath(sfDir: String): String = s"${baseDir(sfDir)}/img_mc.parquet"
-
+  /** Median-cut palette (q212). */
   final case class ImgMcRow(image_id: String, n_colors: Long, dom_count: Long,
                             dom_r: Long, dom_g: Long, dom_b: Long, l1_qerr: Long)
-
-  /** Median-cut palette fixture through the SAME kernel img_mediancut
-    * wraps (q212 recompute-pin contract). Also chains [[ensureImgTex]]:
-    * `graft.Bench`'s untimed-setup list (frozen for measurement) predates
-    * the img_tex fixture, so without the chain the full texture build ran
-    * inside the first TIMED query that touched it (ADVICE r5; Bench calls
-    * ensureImgMc last, so the chain lands in the untimed block). */
-  def ensureImgMc(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    ensureImgTex(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGMC_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val m = Images.medianCut8(Images.decode(bytes)._3)
-        ImgMcRow(id, m(0), m(1), m(2), m(3), m(4), m(5))
-      }
-      .write.mode("overwrite").parquet(imgMcPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGMC_DONE"))
-  }
-
-  def imgWbPath(sfDir: String): String = s"${baseDir(sfDir)}/img_wb.parquet"
-
+  /** Gray-world white balance: exact per-channel byte sums (q212). */
   final case class ImgWbRow(image_id: String, sr: Long, sg: Long, sb: Long, npx: Long)
-
-  /** Gray-world white-balance fixture: exact per-channel byte sums
-    * through the SAME kernel img_channel_sums wraps (q212 contract). */
-  def ensureImgWb(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGWB_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes")
-      .as[(String, Array[Byte])]
-      .map { case (id, bytes) =>
-        val s = Images.channelSums(Images.decode(bytes)._3)
-        ImgWbRow(id, s(0), s(1), s(2), s(3))
-      }
-      .write.mode("overwrite").parquet(imgWbPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGWB_DONE"))
-  }
-
-  def imgSsimPath(sfDir: String): String = s"${baseDir(sfDir)}/img_ssim.parquet"
-
+  /** SSIM against itself (exactly 1e6) and against the 3×3 box blur. */
   final case class ImgSsimRow(image_id: String, ssim_self: Long, ssim_blur: Long)
-
-  /** Per-image SSIM fixture through the SAME kernel the SQL expression
-    * calls (the q126/q151 recompute-pin pattern): self-SSIM (exactly
-    * 1e6 by construction) and SSIM against the 3×3 box-blurred image. */
-  def ensureImgSsim(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGSSIM_DONE"))) return
-    import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes", "w", "h")
-      .as[(String, Array[Byte], Int, Int)]
-      .map { case (id, bytes, w, h) =>
-        val rgb = Images.decode(bytes)._3
-        ImgSsimRow(id, Images.ssimQ(w, h, rgb, rgb),
-          Images.ssimQ(w, h, rgb, Images.boxBlur3Rgb(w, h, rgb)))
-      }
-      .write.mode("overwrite").parquet(imgSsimPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGSSIM_DONE"))
-  }
-
+  /** Laplacian sharpness, raw and after one 3×3 box blur (q126). */
   final case class ImgQualityRow(image_id: String, sharp: Long, sharp_blur: Long)
 
-  /** Materializes per-image Laplacian sharpness (raw and after one 3×3
-    * box blur) through the SAME kernels the SQL expressions call — the
-    * phash precedent (q12): the oracle then checks the Spark expression
-    * path recomputes every row identically AND the downstream relational
-    * logic, while closed-form kernel cases live in BlurSpec. */
-  def ensureImgQuality(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_IMGQUALITY_DONE"))) return
+  /** All sixteen fixture rows of one image. */
+  final case class ImgFeatures(color: ImgColorRow, edge: ImgEdgeRow, expo: ImgExpoRow,
+                               gamma: ImgGammaRow, mom: ImgMomRow, thumb: ImgThumbRow,
+                               eq: ImgEqRow, med: ImgMedRow, dither: ImgDitherRow,
+                               glcm: ImgGlcmRow, tex: ImgTexRow, haar: ImgHaarRow,
+                               mc: ImgMcRow, wb: ImgWbRow, ssim: ImgSsimRow,
+                               quality: ImgQualityRow)
+
+  private def md5Hex(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(b).map(x => f"${x & 0xFF}%02x").mkString
+
+  private def firstMax(a: Array[Long]): Int = a.indexOf(a.max)
+
+  /** Decodes one image once and applies every kernel to the shared pixels
+    * (each kernel returns a fresh buffer and never writes its input). */
+  def imgFeatures(id: String, bytes: Array[Byte], phash: Long): ImgFeatures = {
+    val (w, h, rgb) = Images.decode(bytes)
+    val hist = Images.colorHist64(rgb)
+    val dom = firstMax(hist)
+    val es = Images.sobelStats(w, h, rgb)
+    val octs = es.slice(2, 10)
+    val luma = Images.lumaHist16(rgb)
+    val gam = Images.gammaRgb(rgb, 2200)
+    val thumb = Images.resizeRgb(w, h, rgb, 16, 16)
+    val tp = Images.phashOfRgb(16, 16, thumb)
+    val eq = Images.equalizeRgb(rgb)
+    val med = Images.median3Rgb(w, h, rgb)
+    val dit = Images.ditherFsRgb(w, h, rgb)
+    val blur = Images.boxBlur3Rgb(w, h, rgb)
+    val sharp = Images.sharpness(w, h, rgb)
+    val g = Images.glcm8(w, h, rgb)
+    var contrast = 0L; var energy = 0L; var homog = 0L
+    var k = 0
+    while (k < 64) {
+      val d = k / 8 - k % 8; val c = g(k)
+      contrast += c * d * d
+      energy += c * c
+      homog += (c * 1000L) / (1 + math.abs(d))
+      k += 1
+    }
+    val lbp = Images.lbpHist(w, h, rgb)
+    val lbpTop = firstMax(lbp)
+    var uni = 0L
+    var p = 0
+    while (p < 256) {
+      if (java.lang.Integer.bitCount(p ^ ((p * 2) % 256 + p / 128)) <= 2) uni += lbp(p)
+      p += 1
+    }
+    val ha = Images.harris(w, h, rgb)
+    val hu = Images.hueHist(rgb)
+    val pl = Images.pal332(rgb)
+    val e = Images.haarEnergy(w, h, rgb)
+    val mc = Images.medianCut8(rgb)
+    val cs = Images.channelSums(rgb)
+    ImgFeatures(
+      ImgColorRow(id, dom.toLong, hist(dom), hist.sum),
+      ImgEdgeRow(id, es(0), es(1), octs, firstMax(octs) + 1L),
+      ImgExpoRow(id, luma, luma.sum),
+      ImgGammaRow(id, md5Hex(gam), Images.channelSums(gam), Images.sad(rgb, gam)),
+      ImgMomRow(id, Images.moments(rgb, w, h)),
+      ImgThumbRow(id, tp, md5Hex(thumb), java.lang.Long.bitCount(phash ^ tp).toLong),
+      ImgEqRow(id, md5Hex(eq), Images.lumaHist16(eq)),
+      ImgMedRow(id, md5Hex(med), sharp, Images.sharpness(w, h, med)),
+      ImgDitherRow(id, md5Hex(dit), Images.channelSums(dit).take(3).sum, Images.sad(rgb, dit)),
+      ImgGlcmRow(id, contrast, energy, homog, g.sum),
+      ImgTexRow(id, lbp.sum, uni, lbpTop.toLong, lbp(lbpTop),
+        ha(0), ha(1), ha(2), ha(3), ha(4),
+        hu(0), hu(1), hu(2), hu(3), hu(4), hu(5), hu(6),
+        pl(0), pl(1), pl(2), pl(3)),
+      ImgHaarRow(id, w.toLong, h.toLong, e(0), e(1), e(2), e(3), e(4), e(5), e(6)),
+      ImgMcRow(id, mc(0), mc(1), mc(2), mc(3), mc(4), mc(5)),
+      ImgWbRow(id, cs(0), cs(1), cs(2), cs(3)),
+      ImgSsimRow(id, Images.ssimQ(w, h, rgb, rgb), Images.ssimQ(w, h, rgb, blur)),
+      ImgQualityRow(id, sharp, Images.sharpness(w, h, blur)))
+  }
+
+  /** Builds all sixteen image-feature fixtures from ONE scan of
+    * images.parquet: the feature rows are computed once and cached, and
+    * each fixture is a typed projection of the cache, so every table keeps
+    * the schema of its row class. */
+  def ensureImgFixtures(spark: SparkSession, sfDir: String): Unit = derived(spark, sfDir, "IMG") {
     import spark.implicits._
-    images(spark, sfDir)
-      .select("image_id", "bytes", "w", "h")
-      .as[(String, Array[Byte], Int, Int)]
-      .map { case (id, bytes, w, h) =>
-        val rgb = Images.decode(bytes)._3
-        ImgQualityRow(id, Images.sharpness(w, h, rgb),
-          Images.sharpness(w, h, Images.boxBlur3Rgb(w, h, rgb)))
-      }
-      .write.mode("overwrite").parquet(imgQualityPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_IMGQUALITY_DONE"))
+    val all = images(spark, sfDir)
+      .select("image_id", "bytes", "phash").as[(String, Array[Byte], Long)]
+      .map { case (id, bytes, ph) => imgFeatures(id, bytes, ph) }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    def write[T: Encoder](path: String => String)(row: ImgFeatures => T): Unit =
+      all.map(row).write.mode("overwrite").parquet(path(sfDir))
+    try {
+      write(imgColorPath)(_.color)
+      write(imgEdgePath)(_.edge)
+      write(imgExpoPath)(_.expo)
+      write(imgGammaPath)(_.gamma)
+      write(imgMomPath)(_.mom)
+      write(imgThumbPath)(_.thumb)
+      write(imgEqPath)(_.eq)
+      write(imgMedPath)(_.med)
+      write(imgDitherPath)(_.dither)
+      write(imgGlcmPath)(_.glcm)
+      write(imgTexPath)(_.tex)
+      write(imgHaarPath)(_.haar)
+      write(imgMcPath)(_.mc)
+      write(imgWbPath)(_.wb)
+      write(imgSsimPath)(_.ssim)
+      write(imgQualityPath)(_.quality)
+    } finally all.unpersist()
   }
 
   // ---- multimodal media fixture (GMV1 opaque-binary; stub codec) ----
@@ -959,16 +674,12 @@ object GeoTables {
     spark.read.parquet(mediaDeltaPath(sfDir))
   }
 
-  def ensureMediaDelta(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_MEDIA_DELTA_DONE_V1"))) return
-    import spark.implicits._
-    val parts = math.max(spark.sparkContext.defaultParallelism, 8)
-    spark.range(0, nMediaDelta(sfDir), 1, parts).map(mediaDeltaRow(_))
-      .write.mode("overwrite").parquet(mediaDeltaPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_MEDIA_DELTA_DONE_V1"))
-  }
+  def ensureMediaDelta(spark: SparkSession, sfDir: String): Unit =
+    derived(spark, sfDir, "MEDIA_DELTA_V1") {
+      import spark.implicits._
+      spark.range(0, nMediaDelta(sfDir), 1, genParts(spark)).map(mediaDeltaRow(_))
+        .write.mode("overwrite").parquet(mediaDeltaPath(sfDir))
+    }
 
   def mediaZcrPath(sfDir: String): String = s"${baseDir(sfDir)}/media_zcr.parquet"
 
@@ -978,13 +689,9 @@ object GeoTables {
     * synth arrays (mediaRow's contract: the engine must re-derive them by
     * DECODING the GMV1/WAV container — so the oracle pins the codec
     * round-trip AND the window kernel). */
-  def ensureMediaZcr(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensureMedia(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_MEDIA_ZCR_DONE"))) return
+  def ensureMediaZcr(spark: SparkSession, sfDir: String): Unit = derived(spark, sfDir, "MEDIA_ZCR") {
     import spark.implicits._
-    val parts = math.max(spark.sparkContext.defaultParallelism, 8)
-    spark.range(0, nMedia(sfDir), 1, parts)
+    spark.range(0, nMedia(sfDir), 1, genParts(spark))
       .filter(_ % 2 == 1) // audio rows (mediaRow: odd ids)
       .flatMap { i =>
         val ns = 4000 + (i % 7).toInt * 1000
@@ -992,20 +699,13 @@ object GeoTables {
           .zipWithIndex.map { case (z, wi) => MediaZcrRow(i, wi.toLong, z) }
       }
       .write.mode("overwrite").parquet(mediaZcrPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_MEDIA_ZCR_DONE"))
   }
 
-  /** Additive fixture (own VERSIONED marker, mirrors the textfeat pattern
-    * — bump the suffix when the synthesis changes so stale dirs regen). */
-  def ensureMedia(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(spark, sfDir)
-    val base = baseDir(sfDir)
-    if (Files.exists(Paths.get(s"$base/_MEDIA_DONE_V6"))) return
+  /** The tag carries a version: bump it when the synthesis changes. */
+  def ensureMedia(spark: SparkSession, sfDir: String): Unit = derived(spark, sfDir, "MEDIA_V6") {
     import spark.implicits._
-    val parts = math.max(spark.sparkContext.defaultParallelism, 8)
-    spark.range(0, nMedia(sfDir), 1, parts).map(mediaRow(_))
+    spark.range(0, nMedia(sfDir), 1, genParts(spark)).map(mediaRow(_))
       .write.mode("overwrite").parquet(mediaPath(sfDir))
-    Files.createFile(Paths.get(s"$base/_MEDIA_DONE_V6"))
   }
 
   /** Fixed table schemas (the binding input_hint shape). Passing these to
@@ -1029,6 +729,35 @@ object GeoTables {
     spark.read.schema(zonesSchema).parquet(zonesPath(sfDir))
   }
 
+  /** Every derived fixture, for callers that must build them all before a
+    * timed region (graft.Bench). */
+  def ensureAllDerived(spark: SparkSession, sfDir: String): Unit = {
+    ensureTri(spark, sfDir)
+    ensureGrid(spark, sfDir)
+    ensureNearDup(spark, sfDir)
+    ensureXmodal(spark, sfDir)
+    ensureTextFeat(spark, sfDir)
+    ensureMedia(spark, sfDir)
+    ensureMediaDelta(spark, sfDir)
+    ensureMediaZcr(spark, sfDir)
+    ensureImgFixtures(spark, sfDir)
+  }
+
+  /** The one builder every derived fixture goes through: under the object
+    * lock and after the base tables exist, `build` runs only while the
+    * `_<tag>_DONE` marker is absent, and the marker is written only after
+    * `build` returns, so an interrupted build reruns (builds write with
+    * mode "overwrite"). Bump a tag to regenerate its fixtures; bump [[GEN]]
+    * to regenerate everything. */
+  private def derived(spark: SparkSession, sfDir: String, tag: String)(build: => Unit): Unit =
+    synchronized {
+      ensure(spark, sfDir)
+      val marker = Paths.get(s"${baseDir(sfDir)}/_${tag}_DONE")
+      if (!Files.exists(marker)) { build; Files.createFile(marker) }
+    }
+
+  private def genParts(spark: SparkSession): Int = math.max(spark.sparkContext.defaultParallelism, 8)
+
   def ensure(spark: SparkSession, sfDir: String): Unit = synchronized {
     val base = baseDir(sfDir)
     if (Files.exists(Paths.get(s"$base/_DONE"))) return
@@ -1038,7 +767,7 @@ object GeoTables {
     val tmp = s"$base.tmp${ProcessHandle.current().pid()}"
     // partition the generation so image encoding parallelizes across cores;
     // sort by cell-morton-friendly id order is free (ids are sequential)
-    val parts = math.max(spark.sparkContext.defaultParallelism, 8)
+    val parts = genParts(spark)
     spark.range(0, nImg, 1, parts).map(i => imageRow(i))
       .write.mode("overwrite").parquet(s"$tmp/images.parquet")
     spark.range(0, nZ, 1, math.min(parts, 8)).map(z => zoneRow(z, nZ))

@@ -185,8 +185,6 @@ object ImageDedup {
       val clean = next.drop("_changed")
       labels = clean.sparkSession.createDataFrame(clean.rdd, clean.schema)
       rounds += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(f"[cc] round $rounds changed=$changed")
     }
     // hash-min converges in O(component diameter) rounds; a diameter above
     // maxRounds means the labels are WRONG, not slow — fail loudly rather

@@ -450,13 +450,6 @@ object SpatialJoins {
     // (and components' round loop); materializing them as RDD-scan leaves
     // keeps every task binary small instead of re-shipping the whole
     // union-of-joins plan per stage
-    val dbg = sys.env.contains("GRAFT_DEBUG_CC")
-    var tLast = System.nanoTime()
-    def tick(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[dbscan] $tag ${(now - tLast) / 1e9}%.2fs")
-      tLast = now
-    }
     def mat(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(true)
       spark.createDataFrame(c.rdd, c.schema)
@@ -504,9 +497,7 @@ object SpatialJoins {
       .where((col("alon") - col("blon")) * (col("alon") - col("blon")) +
              (col("alat") - col("blat")) * (col("alat") - col("blat")) <= eps2)
       .select(col("a"), col("b"), col("bcx"), col("bcy"))
-    tick("setup")
     val ringPtsM = mat(ringPts)
-    tick("ringPts")
     val ringCnt = ringPtsM.groupBy("a").agg(count(lit(1)).as("ring_n"))
     val sparseCore = mat(sparsePts
       .join(nearN, Seq("cx", "cy"))
@@ -541,9 +532,7 @@ object SpatialJoins {
     val e3b = coreRing.join(sparseCore.select(col("id").as("b")), "b")
       .select(col("a").as("ea"), col("b").as("eb"))
     val edges1 = e0.unionByName(e1).unionByName(e3a).unionByName(e3b)
-    tick("sparseCore+edges-built")
     val lab1 = ImageDedup.components(edges1, "ea", "eb")
-    tick("components1")
 
     // ---- phase-2: exact gap checks between dense ring cells ---------------
     val ddRing = shifted(denseCells.select(col("cx"), col("cy"), col("minid").as("ma")),
@@ -560,7 +549,6 @@ object SpatialJoins {
       .select("cx", "cy", "ncx", "ncy", "la", "lb")
       .persist()
     val nGaps = cand.count()
-    tick("gap-candidates")
     val lab2 = if (nGaps == 0) null
     else {
       val confirmed = cand
@@ -577,7 +565,6 @@ object SpatialJoins {
       confirmed.unpersist()
       l2
     }
-    tick("phase2")
     // final label = lab2∘lab1 (lab2 merges phase-1 labels; min of mins = min)
     val nodes = denseCells.select(col("minid").as("id")).union(sparseCore.select("id")).distinct()
     val labFinalBase = nodes
@@ -623,10 +610,8 @@ object SpatialJoins {
       st.gapChecks = nGaps
     }
     // materialize BEFORE releasing the caches (review finding r4)
-    tick("labels-final")
     val result = densePts.unionByName(sparseCorePts).unionByName(borders)
       .localCheckpoint(true)
-    tick("assemble")
     Seq(pts, cells, cand).foreach(_.unpersist())
     result
   }
@@ -909,6 +894,13 @@ object SpatialJoins {
     math.max(2L, 1L + math.ceil(rNeed).toLong)
   }
 
+  /** knnLarge's broadcast gate for one round's probe side, which holds
+    * exactly frontierCnt · annulus rows: broadcast when that fits 2²² rows.
+    * Written as a division so a large frontier times a wide annulus can't
+    * wrap the product negative and pass the gate. */
+  private[join] def probeFitsBroadcast(frontierCnt: Long, annulus: Long): Boolean =
+    frontierCnt <= (1L << 22) / math.max(annulus, 1L)
+
   /**
    * All-DataFrame kNN for LARGE query sets (#47 large-Q path; judge item 7
    * r1): no per-query driver state — the query frontier, accumulated
@@ -941,14 +933,6 @@ object SpatialJoins {
 
     var frontier = qAll
     var frontierCnt = qAll.count()
-    val dbg = sys.env.contains("GRAFT_KNN_DEBUG")
-    var tTick = System.nanoTime()
-    def tick(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"[knnLarge] $tag%-18s +${(now - tTick) / 1e9}%.2fs (frontier=$frontierCnt)")
-      tTick = now
-    }
-    tick("setup")
     var cands: DataFrame = null // (q_id, nx, ny, p_id, d2) — global top-k so far
     var lo = 0L
     var hi = initialHi(k, nPts, n) // density-adaptive first annulus (see knn)
@@ -982,7 +966,7 @@ object SpatialJoins {
       // every round sort-merge-shuffled the full point index)
       val annulus = (2 * hi - 1) * (2 * hi - 1) -
         (if (lo == 0) 0L else (2 * lo - 1) * (2 * lo - 1))
-      val probe = if (frontierCnt * math.max(annulus, 1L) <= (1L << 22)) broadcast(probe1) else probe1
+      val probe = if (probeFitsBroadcast(frontierCnt, annulus)) broadcast(probe1) else probe1
       val fresh = pts.join(probe, "cell")
         .select(col("q_id"), col("nx"), col("ny"), col("p_id"),
           ((col("p_nx") - col("nx")) * (col("p_nx") - col("nx")) +
@@ -1001,7 +985,6 @@ object SpatialJoins {
         .localCheckpoint(true) // cut the per-round lineage growth
       if (cands != null) cands.unpersist()
       cands = merged
-      tick(s"round hi=$hi merge")
       // satisfied: k candidates whose kth distance is inside the probed radius
       val bound = ((hi - 1).toDouble * cellSize) * ((hi - 1).toDouble * cellSize)
       val solved = cands.groupBy("q_id")
@@ -1010,12 +993,10 @@ object SpatialJoins {
         .select("q_id")
       frontier = qAll.join(solved, Seq("q_id"), "left_anti")
       frontierCnt = frontier.count() // one job — replaces the isEmpty probe
-      tick(s"round hi=$hi solved")
       lo = hi
       hi = math.min(hi * 2, 2 * n)
     }
     if (frontierCnt > 0) {
-      tick("pre-brute")
       // sparse-region stragglers: exact distributed scan (points × remaining
       // queries); still no driver-side per-query state
       val brute = bruteTopK(pts, frontier, k)

@@ -68,21 +68,27 @@ case class TopKPairs(ordExpr: Expression, idExpr: Expression, kExpr: Expression,
 
   override def createAggregationBuffer(): Buf = new java.util.TreeSet[(Any, Any)](Cmp)
 
-  private def add(b: Buf, e: (Any, Any)): Unit = {
-    if (b.size < k) { b.add(e); () }
-    else if (Cmp.compare(e, b.last()) < 0) { if (b.add(e)) { b.pollLast(); () } }
-  }
+  /** A string id evaluated from an input row points into that row's
+    * buffer, which the scan or shuffle reader reuses for the next row, so
+    * a pair from `update` is copied — only once it enters the buffer, so
+    * rejected rows cost nothing. Pairs from `merge` are already owned. */
+  private def add(b: Buf, e: (Any, Any), fromInput: Boolean): Unit =
+    if (b.size < k || Cmp.compare(e, b.last()) < 0) {
+      val kept =
+        if (fromInput && !idIsLong) (e._1, e._2.asInstanceOf[UTF8String].clone()) else e
+      if (b.add(kept) && b.size > k) b.pollLast()
+    }
 
   override def update(b: Buf, row: InternalRow): Buf = {
     val o = ordExpr.eval(row)
     val i = idExpr.eval(row)
-    if (o != null && i != null) add(b, (o, i))
+    if (o != null && i != null) add(b, (o, i), fromInput = true)
     b
   }
 
   override def merge(b: Buf, other: Buf): Buf = {
     val it = other.iterator()
-    while (it.hasNext) add(b, it.next())
+    while (it.hasNext) add(b, it.next(), fromInput = false)
     b
   }
 

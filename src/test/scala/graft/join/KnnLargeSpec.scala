@@ -69,4 +69,15 @@ class KnnLargeSpec extends AnyFunSuite {
     val viaLarge = SpatialJoins.knn(img, queries, k = 2, level = 5, largeQThreshold = 10)
     assert(viaLarge.count() == 200)
   }
+
+  test("probe broadcast gate: exact at 2^22 and no wrap for a huge frontier x annulus") {
+    assert(SpatialJoins.probeFitsBroadcast(1L << 11, 1L << 11))
+    assert(!SpatialJoins.probeFitsBroadcast((1L << 11) + 1, 1L << 11))
+    assert(SpatialJoins.probeFitsBroadcast(5, 0))
+    // 1e8 · 2^40 wraps a signed long negative, so a product-form gate
+    // (`frontierCnt * annulus <= 2^22`) would pass it
+    val (frontierCnt, annulus) = (100000000L, 1L << 40)
+    assert(frontierCnt * annulus < 0)
+    assert(!SpatialJoins.probeFitsBroadcast(frontierCnt, annulus))
+  }
 }
