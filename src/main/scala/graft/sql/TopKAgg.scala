@@ -30,6 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
  * identical to Spark's string sort order). For a DESCENDING ord (cosine
  * similarity), callers pass the negated ord. K ≤ 4096 (the buffer is
  * O(K) per group; candidate-ranking ks are single digits).
+ *
+ * Set semantics: the buffer keeps DISTINCT (ord, id) pairs, so a pair
+ * that occurs on several input rows counts once. On input with duplicate
+ * rows the result can therefore differ from the `row_number()` window,
+ * which ranks every row: the window may return the same pair twice and
+ * fewer distinct pairs.
  */
 case class TopKPairs(ordExpr: Expression, idExpr: Expression, kExpr: Expression,
                      mutableAggBufferOffset: Int = 0,

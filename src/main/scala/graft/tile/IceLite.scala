@@ -227,8 +227,12 @@ object IceLite {
   def listSnapshots(root: String): Seq[String] = {
     val meta = metaDir(root)
     if (!Files.exists(meta)) Seq.empty
-    else Files.list(meta).iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith("snap-") && n.endsWith(".json")).toSeq.sorted
+    else {
+      val s = Files.list(meta)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("snap-") && n.endsWith(".json")).toList.sorted
+      finally s.close()
+    }
   }
 
   /**

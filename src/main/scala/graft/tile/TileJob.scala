@@ -1,8 +1,11 @@
 package graft.tile
 
 import graft.sql.GraftFunctions
+import org.apache.spark.RangePartitioner
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -29,11 +32,15 @@ object TileJob {
     * (no overflow under ANSI mode, which Spark 4 enables by default). */
   private def checksumCol = xxhash64(col("image_id"), col("tx"), col("ty"), col("phash"))
 
-  /** Per-bucket (rows, cellMin, cellMax, checksum, lineage) from ONE
+  /** A bucket's (rows, cellMin, cellMax, checksum, lineage). */
+  private type BucketStats = (Long, Long, Long, Long, Seq[IceLite.LineageRow])
+
+  /** Per-bucket [[BucketStats]] from ONE
     * read-back of the committed files under `basePath` (what readers
-    * will see), keyed by bucket id. */
+    * will see), keyed by bucket id. `schema` is the schema of the frame
+    * the caller just wrote, so the read runs no footer-inference job. */
   private def bucketStats(spark: SparkSession, basePath: String, dirs: Seq[String],
-      jobId: String): Map[Long, (Long, Long, Long, Long, Seq[IceLite.LineageRow])] = {
+      jobId: String, schema: StructType): Map[Long, BucketStats] = {
     if (dirs.isEmpty) return Map.empty
     // ONE job: per-(bucket, partition) stats collected once; bucket
     // totals fold in the driver (rows/cmin/cmax by sum/min/max, checksum
@@ -41,9 +48,9 @@ object TileJob {
     // mask). Was two full read-back jobs per call; on the streaming
     // ingest path that is one job per micro-batch saved.
     val perPid = spark.read
+      .schema(schema)
       .option("basePath", basePath)
       .parquet(dirs: _*)
-      .withColumn("bucket", col("bucket").cast("long"))
       .withColumn("pid", spark_partition_id())
       .withColumn("cs", checksumCol)
       .groupBy("bucket", "pid")
@@ -66,16 +73,22 @@ object TileJob {
   private val coreCols = Seq("bucket", "image_id", "caption", "w", "h",
     "fmt", "lon", "lat", "cell", "tx", "ty", "phash", "phash_ok")
 
+  /** The sort-key columns: bucket (level-`bucketLevel` cell) and cell
+    * (level-`zoom` cell), both from lon/lat; with image_id they order
+    * every table file. */
+  private def withKeys(df: DataFrame, zoom: Int, bucketLevel: Int): DataFrame =
+    df.withColumn("bucket",
+        call_function("st_cellid", col("lon"), col("lat"), lit(bucketLevel)))
+      .withColumn("cell", call_function("st_cellid", col("lon"), col("lat"), lit(zoom)))
+
   private def tileProjection(df: DataFrame, zoom: Int, bucketLevel: Int,
                              extraCols: Seq[String] = Nil): DataFrame = {
     val clash = extraCols.filter(c => coreCols.contains(c.toLowerCase))
     require(clash.isEmpty,
       s"extraCols ${clash.mkString(",")} collide with core table columns")
-    df.withColumn("bucket",
-        call_function("st_cellid", col("lon"), col("lat"), lit(bucketLevel)))
+    withKeys(df, zoom, bucketLevel)
       .withColumn("tx", call_function("st_tile_x", col("lon"), lit(zoom)))
       .withColumn("ty", call_function("st_tile_y", col("lat"), lit(zoom)))
-      .withColumn("cell", call_function("st_cellid", col("lon"), col("lat"), lit(zoom)))
       .withColumn("phash_ok", call_function("img_phash", col("bytes")) === col("phash"))
       // add-column evolution (opt-in so the core table layout stays
       // byte-stable): named batch columns beyond the core contract ride
@@ -130,8 +143,8 @@ object TileJob {
         s"ingest marker $marker exists but the table has no current snapshot"))
 
     val base = s"$outRoot/data-s$batchId"
-    tileProjection(batch, zoom, bucketLevel, extraCols)
-      .sortWithinPartitions("bucket", "cell", "image_id")
+    val tiles = tileProjection(batch, zoom, bucketLevel, extraCols)
+    tiles.sortWithinPartitions("bucket", "cell", "image_id")
       .write.mode("overwrite").partitionBy("bucket").parquet(base)
 
     val dirs = {
@@ -144,7 +157,7 @@ object TileJob {
         finally s.close()
       }
     }
-    val stats = bucketStats(spark, base, dirs, jobId)
+    val stats = bucketStats(spark, base, dirs, jobId, tiles.schema)
     val entries = prev.map(_.buckets.toVector).getOrElse(Vector.empty) ++
       stats.toSeq.sortBy(_._1).map { case (b, (rows, cmin, cmax, cs, lineage)) =>
         IceLite.BucketEntry(b.toInt, rows, cs, cmin, cmax, s"$base/bucket=$b", lineage)
@@ -160,6 +173,21 @@ object TileJob {
     snap
   }
 
+  /** The range partition of each row of `keys` (bucket, cell, image_id)
+    * among `nParts` contiguous key ranges, whose bounds come from ONE
+    * sampling job over `keys` alone (the sketch of Spark's own
+    * `repartitionByRange`). Strings compare as UTF-8 bytes, Spark's sort
+    * order, so each range is one contiguous slice of the sorted table. */
+  private def rangePartitionId(keys: DataFrame, nParts: Int): Column = {
+    def key(b: Long, c: Long, id: String) =
+      (b, c, if (id == null) UTF8String.EMPTY_UTF8 else UTF8String.fromString(id))
+    val sample = keys.select("bucket", "cell", "image_id").rdd
+      .map(r => (key(r.getLong(0), r.getLong(1), r.getString(2)), ()))
+    val ranges = new RangePartitioner(nParts, sample)
+    udf((b: Long, c: Long, id: String) => ranges.getPartition(key(b, c, id)))
+      .apply(col("bucket"), col("cell"), col("image_id"))
+  }
+
   final case class Failpoint(afterBuckets: Int) extends RuntimeException(
     s"injected failure after $afterBuckets buckets (test hook)")
 
@@ -173,34 +201,42 @@ object TileJob {
 
     val pending = (0 until nBuckets).filterNot(done.contains)
 
-    // ONE pass over the input for all pending buckets (the per-bucket
-    // `where(bucket_cell === b)` of the old design got no parquet pushdown
-    // — bucket_cell is computed — so it rescanned the input once per
-    // bucket). Big buckets split across tasks by (cell, image_id) ranges
-    // instead of a coalesce(1) single-task choke; dynamic partition
-    // overwrite only replaces the bucket dirs we actually write, so
-    // committed buckets from a previous run are never touched.
-    if (pending.nonEmpty) {
-      val nParts = math.max(spark.sparkContext.defaultParallelism, pending.size)
-      // the bucket filter is pushed below the projection by Catalyst
-      // (alias substitution), so img_phash never runs on skipped buckets
-      tileProjection(spark.read.parquet(imagesPath), zoom, bucketLevel)
-        .where(col("bucket").isInCollection(pending.map(_.toLong)))
-        .repartitionByRange(nParts, col("bucket"), col("cell"), col("image_id"))
+    // ONE pass over the input for all pending buckets, in one task wave.
+    //  - Bounds without decode: the range bounds come from a sample of the
+    //    sort keys (bucket, cell, image_id) alone, which reads lon, lat and
+    //    image_id. `repartitionByRange` would sample its whole child, so
+    //    every image would be decoded for the sample and again for the
+    //    write; here `img_phash` runs once per input row, map-side, and
+    //    the image bytes never cross the exchange.
+    //  - One wave: `defaultParallelism` contiguous, sorted key ranges, one
+    //    write task per core; a big bucket spans several tasks, and a task
+    //    writes one file per bucket its range touches (at most
+    //    parallelism + non-empty buckets - 1 files in all).
+    //  - The bucket filter is pushed below the projection by Catalyst
+    //    (alias substitution), so nothing runs on skipped buckets, and
+    //    dynamic partition overwrite replaces only the bucket dirs written:
+    //    buckets committed by a previous run are never touched.
+    //  - Known-schema read-back: stats + lineage for every pending bucket
+    //    come from one read-back of the committed files (what readers will
+    //    see), read with the schema just written, so no footer-inference
+    //    job runs.
+    val statRows: Map[Long, BucketStats] = if (pending.isEmpty) Map.empty else {
+      val images = spark.read.parquet(imagesPath)
+      val inPending = col("bucket").isInCollection(pending.map(_.toLong))
+      val nParts = spark.sparkContext.defaultParallelism
+      val rangeId = rangePartitionId(
+        withKeys(images, zoom, bucketLevel).where(inPending), nParts)
+      val tiles = tileProjection(images, zoom, bucketLevel).where(inPending)
+      tiles.repartitionById(nParts, rangeId)
         .sortWithinPartitions("bucket", "cell", "image_id")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(s"$outRoot/data")
-    }
-
-    // stats + lineage for every pending bucket in one read-back of the
-    // committed files (what readers will see), keyed by bucket
-    val statRows: Map[Long, (Long, Long, Long, Long, Seq[IceLite.LineageRow])] =
-      if (pending.isEmpty) Map.empty
-      else bucketStats(spark, s"$outRoot/data",
+      bucketStats(spark, s"$outRoot/data",
         pending.map(b => s"$outRoot/data/bucket=$b")
-          .filter(d => Files.exists(Paths.get(d))), jobId)
+          .filter(d => Files.exists(Paths.get(d))), jobId, tiles.schema)
+    }
 
     // per-bucket snapshot commits (driver-only) keep the resume granularity:
     // a crash between commits loses at most one bucket's bookkeeping
